@@ -109,8 +109,8 @@ def _pq_pretrained_factory(spark, sf_dir):
 
 def _ivfpq_pretrained_factory(spark, sf_dir):
     """Same decomposition discipline for the r15 IVF-ADC line: the
-    registry query's path with BOTH trainers (MLlib coarse fit +
-    residual PQ sample) hoisted out of the timed reps, so encode/scan/
+    registry query's path with BOTH trainers (coarse k-means +
+    residual PQ, one sample) hoisted out of the timed reps, so encode/scan/
     rerank regressions are attributable — the ivfpq scale probe gates
     the same pretrained path's 10x curve."""
     from pyspark.sql import functions as F

@@ -243,8 +243,7 @@ def _ivfpq_recall(spark: SparkSession, n: int, k: int = 5) -> tuple[float, float
     """Time the IVF-ADC QUERY PATH (encode + probed-list ADC scan +
     exact rerank) with the index trained untimed — training is a
     bounded fixed cost (one 4096-row hash-ordered sample feeding both
-    the coarse and residual k-means since the r15 sample-trainer
-    default; MLlib is the opt-in) that would dilute the curve this
+    the coarse and residual k-means) that would dilute the curve this
     gate exists to watch: the scan work that grows with the corpus."""
     from spreadsheet_etl_engine_spark.operators.similarity import (
         topk_bruteforce, topk_ivfpq, train_ivfpq,
@@ -425,18 +424,16 @@ def probe_components(spark: SparkSession, reps: int, n: int) -> dict:
 
 
 def probe_stardiam(spark: SparkSession, reps: int, n: int) -> dict:
-    """label vs star components as component DIAMETER grows at a fixed
-    edge budget (r10 verdict item 4).  Two axes in one probe:
+    """connected_components as component DIAMETER grows at a fixed edge
+    budget.  Three arms of the same total edge count:
 
-    * default-choice evidence: on the dup-shaped arm (diameter 15,
-      chains of 16 — already the worst REALISTIC dup shape; cliques
-      converge in 1 round) compare label vs star wall time.  If label
-      wins here, it stays the default.
-    * diameter growth: the same total edges re-wired into chains of 50
-      (diameter 49, past the default max_iter=25 fail-loud bound).
-      label's round count grows with the diameter; star's stays
-      O(log n) — star must converge under the SAME budget with wall
-      time far below label-at-49's extrapolation.
+    * dup: what duplicate_cluster_edges emits — min-id star edges per
+      cluster (diameter 2), the registry's real workload;
+    * d15 / d49: the same edges wired into chains of 16 and 50 (hashed,
+      so unordered, ids).  Plain propagation needs rounds ∝ diameter
+      (d49: ~50, past the default max_iter=25); the jump and hook
+      shortcuts make rounds grow with log(diameter), so wall time must
+      stay ~flat from d15 to d49.
 
     Total edge count is FIXED across arms so any wall-time movement is
     round structure, not data volume."""
@@ -447,10 +444,6 @@ def probe_stardiam(spark: SparkSession, reps: int, n: int) -> dict:
         return synth_chain_edges(spark, n_chains, chain_len=chain_len)
 
     def dup_stars(members_per_cluster: int = 10) -> DataFrame:
-        # What duplicate_cluster_edges actually emits: min-id star
-        # edges per cluster (diameter 2) — the REAL dup workload the
-        # default must serve, vs the chain arms below (diameter = the
-        # algorithmic stressor).
         m = members_per_cluster
         return spark.range(n).select(
             (F.xxhash64(F.expr(f"id div {m}") * (m + 1))).alias("id_a"),
@@ -458,26 +451,18 @@ def probe_stardiam(spark: SparkSession, reps: int, n: int) -> dict:
                         + F.col("id") % m + 1)).alias("id_b"),
         )
 
-    def run(edges: DataFrame, algorithm: str):
-        return connected_components(
-            edges, max_iter=60, algorithm=algorithm
-        ).agg(F.countDistinct("component")).collect()
+    def run(edges: DataFrame):
+        return connected_components(edges).agg(
+            F.countDistinct("component")).collect()
 
     edup, e16, e50 = dup_stars(), chains(16), chains(50)
-    t_label_dup, t_star_dup = ab_medians(
-        lambda: run(edup, "label"), lambda: run(edup, "star"), reps)
-    t_label16, t_star16 = ab_medians(
-        lambda: run(e16, "label"), lambda: run(e16, "star"), reps)
-    t_label50, t_star50 = ab_medians(
-        lambda: run(e50, "label"), lambda: run(e50, "star"), reps)
+    t_dup, _ = ab_medians(lambda: run(edup), lambda: run(e16), reps)
+    t16, t50 = ab_medians(lambda: run(e16), lambda: run(e50), reps)
     return {
-        "probe": "components_label_vs_star", "edges": n,
-        "t_label_dup": round(t_label_dup, 2),
-        "t_star_dup": round(t_star_dup, 2),
-        "t_label_d15": round(t_label16, 2), "t_star_d15": round(t_star16, 2),
-        "t_label_d49": round(t_label50, 2), "t_star_d49": round(t_star50, 2),
-        "label_growth_d15_to_d49": round(t_label50 / t_label16, 2),
-        "star_growth_d15_to_d49": round(t_star50 / t_star16, 2),
+        "probe": "components_diameter", "edges": n,
+        "t_dup": round(t_dup, 2), "t_d15": round(t16, 2),
+        "t_d49": round(t50, 2),
+        "growth_d15_to_d49": round(t50 / t16, 2),
     }
 
 
@@ -806,8 +791,7 @@ PROBES = {
     # unrunnable at the big arm, which is the point of the collapse.
     "megadup": (probe_megadup, 20_000),
     # 30k edges fixed across arms: enough that per-round shuffles (not
-    # session overhead) dominate, small enough that label's 49-diameter
-    # arm (50 rounds) finishes in probe time.
+    # session overhead) dominate.
     "stardiam": (probe_stardiam, 30_000),
     # 200k events -> 2k users small arm: 4 fixed micro-batches, so the
     # per-batch stateful work (not trigger scheduling) sets the ratio.

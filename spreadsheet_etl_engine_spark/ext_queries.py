@@ -383,7 +383,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", num_hashes=8, bands=4,
         parallelism=spark.sparkContext.defaultParallelism,
         checkpoint_dir=DD.resolve_checkpoint_dir(spark),
-        algorithm=DD.resolve_components_algorithm(spark),
     )
 
 
@@ -470,7 +469,6 @@ def curation_pipeline_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", num_hashes=8, bands=4,
         parallelism=spark.sparkContext.defaultParallelism,
         checkpoint_dir=DD.resolve_checkpoint_dir(spark),
-        algorithm=DD.resolve_components_algorithm(spark),
     )
     key = F.col("doc_id").cast("string")
     d = docs.select(
@@ -718,7 +716,7 @@ def dedup_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "express.  Centroids here are the 8 lowest-vec_id vectors "
         "(Forgy init — deterministic at every SF, so the oracle fetches "
         "the SAME centroids by self-join; production swaps in "
-        "similarity.py:train_centroids_kmeans, same downstream plan).  "
+        "similarity.py:train_centroids_sample, same downstream plan).  "
         "The registry row runs the REAL scale path: Arrow-kernel matmul "
         "assignment (per-row, zero shuffle; fixture min top-2 centroid "
         "gap 4.7e-5 — ten orders above BLAS-vs-fold float noise, and "

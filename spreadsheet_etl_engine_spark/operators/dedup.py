@@ -601,30 +601,6 @@ def ngram_jaccard_pairs(
 
 
 CHECKPOINT_DIR_CONF = "spark.spreadsheet_etl.checkpoint.dir"
-COMPONENTS_ALGORITHM_CONF = "spark.spreadsheet_etl.components.algorithm"
-
-
-def resolve_components_algorithm(spark: SparkSession) -> str:
-    """Session-conf plumbing for :func:`connected_components`' round
-    structure (same pattern as :func:`resolve_checkpoint_dir` — the r9
-    lesson that an operator parameter no registry caller can reach is
-    not really shipped).  Set
-    ``spark.conf.set("spark.spreadsheet_etl.components.algorithm",
-    "star")`` to route every components run in the session through the
-    large-star/small-star formulation — the long-chain escape hatch;
-    unset keeps the measured default (``"label"``, which wins on
-    star/clique-shaped dup graphs).  Invalid values fail loud here, at
-    configuration time, rather than deep inside a running job."""
-    algo = spark.conf.get(COMPONENTS_ALGORITHM_CONF, None)
-    if algo is None or algo == "":
-        return "label"
-    if algo not in ("label", "star"):
-        raise ValueError(
-            f"{COMPONENTS_ALGORITHM_CONF}={algo!r} must be 'label' or "
-            "'star'")
-    return algo
-
-
 def resolve_checkpoint_dir(spark: SparkSession) -> str | None:
     """Session-conf plumbing for :func:`connected_components`'
     fault-tolerant mode (r9 verdict item 5: the parameter existed but no
@@ -658,7 +634,6 @@ def connected_components(
     *,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    algorithm: str = "label",
     _after_edges_pinned=None,
 ) -> DataFrame:
     """Connected components over a pair list → ``(node, component)`` with
@@ -666,14 +641,24 @@ def connected_components(
     representative dedup keeps).
 
     This is the step that turns near-duplicate PAIRS into duplicate
-    CLUSTERS.  Min-label propagation: every node starts as its own label;
-    each round replaces a node's label with the minimum over its
-    neighborhood; converges in O(component diameter) rounds — small for
-    dup clusters, which are near-cliques.  Each round is one shuffle
-    (join + groupBy on node id); per-round checkpointing truncates the
-    lineage so the plan does not grow exponentially with iterations; the
-    loop exits early when a round changes nothing (one scalar count per
-    round, driver-side orchestration only).
+    CLUSTERS.  Min-label propagation with Shiloach-Vishkin-style
+    shortcuts (cf. Rastogi et al., ICDE 2013): every node starts as its
+    own label, and each round sets ``label[v]`` to the minimum of
+    ``label[v]``, ``label[N(v)]``, the pointer jump ``label[label[v]]``
+    and the hook — every ``q`` some node's label dropped to from
+    ``p = v`` in the previous round.  Neighbors alone move a minimum one
+    hop per round (O(diameter) rounds); the jump alone only shortcuts
+    chains whose ids happen to ascend toward the minimum.  With the
+    hook, the node a label points at follows that label down too, so
+    label trees merge as wholes: chains of 50 / 200 / 1000 nodes with
+    shuffled ids take about 11 / 15 / 20 rounds, where propagation
+    alone needs up to 50 / 200 / 1000.  Dup clusters (near-cliques, stars)
+    converge in a few rounds.  Every candidate is a node of v's
+    component and labels only decrease, so the fixed point is the
+    component minimum.  Each round is one aggregation on node id;
+    per-round checkpointing truncates the lineage so the plan does not
+    grow with iterations; the loop exits when a round changes nothing
+    (an observed flag on the round's own pin action).
 
     ``checkpoint_dir`` selects the truncation mechanism — the difference
     is FAULT TOLERANCE, not results (r9 re-execution review):
@@ -701,32 +686,9 @@ def connected_components(
       directory must not already contain round files (fail-loud
       ``mode("error")`` — reusing a dir across runs would silently mix
       rounds).
-
-    ``algorithm`` picks the round structure — results are identical
-    (both return min-id component labels; equivalence is pytest-pinned
-    on chains, triangles, mega-duplicate cliques and random graphs):
-
-    * ``"label"`` (default): min-label propagation, one shuffle per
-      round, O(component diameter) rounds.  The right default for dup
-      graphs, whose components are star/clique shaped (diameter 2-3):
-      on the measured dup-shaped arm (30k star edges, diameter 2) label
-      runs 3.3s vs star's 3.7s — fewer rounds AND a lighter per-round
-      plan (scripts/scale_probe.py --probe stardiam, BENCH_NOTES r11).
-    * ``"star"``: alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", 2014) —
-      O(log n) rounds INDEPENDENT of diameter, each star op one
-      window shuffle over the edge list.  The escape hatch the label
-      loop's non-convergence error names, and the right choice once
-      diameter grows past ~10: measured at the same 30k-edge budget,
-      star's wall time is FLAT as chains grow from diameter 15 to 49
-      (6.0s -> 6.8s) while label's grows 2.8x (8.4s -> 23.5s) and
-      fails loud past max_iter.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter={max_iter} must be >= 1")
-    if algorithm not in ("label", "star"):
-        raise ValueError(
-            f"algorithm={algorithm!r} must be 'label' or 'star'")
     spark = edges.sparkSession
     _round_no = 0
 
@@ -741,15 +703,6 @@ def connected_components(
 
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    # Pre-partition the pinned edge table on the per-round join key
-    # (r16, guide §2.4 "two operations keyed the same way can share one
-    # exchange"): localCheckpoint preserves outputPartitioning, so
-    # every round's sym⋈labels probe reuses this one setup shuffle
-    # instead of re-exchanging the FULL edge table each round — at
-    # scale the edge table is the big side of every round.  (In
-    # reliable/parquet mode the file round-trip drops partitioning and
-    # the round join plans its own exchange, exactly as before.)
-    sym = sym.repartition(F.col("b"))
     sym, _ = _pin(sym)  # referenced every round — never deleted mid-run
     if _after_edges_pinned is not None:
         # The edge lineage's own inputs are dead weight once sym is
@@ -758,47 +711,43 @@ def connected_components(
         # retained, as the directory's LARGEST file, for the whole of
         # the multi-hour preemptible runs reliable mode exists for).
         _after_edges_pinned()
-    if algorithm == "star":
-        return _star_components(spark, sym, max_iter, _pin)
     labels, labels_path = _pin(
         sym.select(F.col("a").alias("node")).distinct()
         .withColumn("component", F.col("node"))
+        .withColumn("_old", F.col("node"))
     )
     from pyspark.sql import Observation
 
-    for _ in range(max_iter):
-        # One join + ONE aggregation per round (r16; the r15 shape was
-        # join → groupBy → second join): each node's new label is the
-        # min over {its own label} ∪ {neighbor labels}, so unioning the
-        # self rows into the neighbor rows folds the r15 label-update
-        # join into the existing aggregation — one fewer join (and its
-        # AQE stage job) per round.  The self row carries the old label
-        # in ``own`` (exactly one non-NULL per node; min() recovers
-        # it), so the convergence flag stays in-row: labels only ever
-        # decrease, so new < old ⇔ some neighbor label beat the old
-        # one — iteration count and labels are provably unchanged
-        # (min(own ∪ nbrs) ≡ least(old, coalesce(nbr_min, old))).
-        nbr = sym.join(
-            labels.select(F.col("node").alias("b"),
-                          F.col("component").alias("c")),
-            "b",
-        ).select(
-            F.col("a").alias("node"), F.col("c").alias("component"),
-            F.lit(None).cast(
-                labels.schema["component"].dataType).alias("own"),
-        )
-        self_rows = labels.select(
+    no_own = F.lit(None).cast(labels.schema["component"].dataType)
+    for rnd in range(max_iter):
+        # ONE aggregation per round over four row sources, each a
+        # candidate label for ``node``: its own label, its neighbors'
+        # labels (sym ⋈ labels), its label's label (the pointer jump,
+        # labels ⋈ labels on component = node) and the hook (a node
+        # whose label dropped from p to q last round offers q to p).
+        # The own row carries the old label in ``own`` (exactly one
+        # non-NULL per node; min() recovers it), so the convergence
+        # flag stays in-row: labels only ever decrease, so new < old ⇔
+        # the round changed the node.  Round 1 skips the jump and the
+        # hook: labels are still the identity, so both are no-ops.
+        lab = labels.select(F.col("node").alias("b"),
+                            F.col("component").alias("c"))
+        rows = labels.select(
             "node", "component", F.col("component").alias("own"))
-        new_labels = (
-            nbr.unionByName(self_rows)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"),
-                 F.min("own").alias("_old"))
-            .select(
-                "node", "component",
-                (F.col("component") < F.col("_old")).alias("_changed"),
-            )
-        )
+        rows = rows.unionByName(sym.join(lab, "b").select(
+            F.col("a").alias("node"), F.col("c").alias("component"),
+            no_own.alias("own")))
+        if rnd > 0:
+            jump = labels.select("node", F.col("component").alias("b"))
+            rows = rows.unionByName(jump.join(lab, "b").select(
+                "node", F.col("c").alias("component"), no_own.alias("own")))
+            rows = rows.unionByName(
+                labels.filter(F.col("component") < F.col("_old")).select(
+                    F.col("_old").alias("node"), "component",
+                    no_own.alias("own")))
+        new_labels = rows.groupBy("node").agg(
+            F.min("component").alias("component"),
+            F.min("own").alias("_old"))
         # The convergence probe rides the pin action itself as an
         # observed metric (r16): the r15 ``isEmpty`` probe on the
         # checkpointed result was one extra driver-sequential job per
@@ -806,113 +755,21 @@ def connected_components(
         # the local bottleneck (profile: job-duration sum ≈ half the
         # wall; the rest is driver latency between jobs).
         obs = Observation()
-        new_labels, new_path = _pin(
-            new_labels.observe(obs, F.max("_changed").alias("changed")))
+        new_labels, new_path = _pin(new_labels.observe(
+            obs, F.max(F.col("component") < F.col("_old")).alias("changed")))
         changed = bool(obs.get["changed"])  # None on an empty graph
         # The pin above was the last reader of round N-1: delete it now
         # that round N is durable (reliable mode only).
         if labels_path is not None:
             _delete_path(spark, labels_path)
-        labels, labels_path = new_labels.drop("_changed"), new_path
+        labels, labels_path = new_labels, new_path
         if not changed:
             return labels.select(F.col("node"), F.col("component"))
     # Silent non-convergence would split one duplicate cluster into
     # several "canonical" representatives — fail loudly instead.
     raise RuntimeError(
         f"connected_components did not converge within max_iter={max_iter} "
-        "rounds (labels still changing in the final round); the graph has "
-        "a component with diameter > max_iter — raise max_iter, or rerun "
-        "with algorithm='star' (O(log n) rounds independent of diameter)"
-    )
-
-
-def _star_components(
-    spark: SparkSession, sym: DataFrame, max_iter: int, _pin
-) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al. 2014)
-    over the pinned symmetric edge list ``sym`` → min-id ``(node,
-    component)`` labels.  Called only by :func:`connected_components`
-    (``algorithm="star"``), which owns validation and the checkpoint
-    lifecycle (``_pin`` is its round-pinning closure).
-
-    Each round: large-star hangs every neighbor LARGER than u off u's
-    minimum; small-star re-hangs the smaller neighbors (and u itself)
-    off that minimum.  Both are ONE window shuffle over narrow (u, v)
-    rows — the per-partition work is a running min, spillable, never
-    quadratic — and both strictly preserve connectivity while only
-    ever lowering a node's parent, so the process contracts every
-    component onto its minimum id in O(log n) rounds regardless of
-    diameter (the paper's Theorem 3) where min-label propagation needs
-    O(diameter).  Fixed point ⟺ the canonical edge set is unchanged by
-    a round ⟺ the edges form stars rooted at component minima: the
-    roots are then the labels.  Every edge emitted by either star op
-    has parent < child by construction, so the fixed-point star set is
-    directly the (node, component) map for non-root nodes; roots and
-    isolated nodes (self-loop inputs) coalesce to themselves."""
-    from pyspark.sql.window import Window
-
-    # Canonical undirected edges (hi, lo), self-loops dropped: sym holds
-    # both directions, so one strict filter yields each edge once.
-    E, e_path = _pin(
-        sym.filter(F.col("a") > F.col("b"))
-        .select(F.col("a").alias("hi"), F.col("b").alias("lo"))
-        .distinct()
-    )
-    n_e = E.count()
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    w_u = Window.partitionBy("u")
-    for _ in range(max_iter):
-        if n_e == 0:
-            break
-        # Large-star: for each u, m = min(Γ(u) ∪ {u}); emit (v, m) for
-        # v ∈ Γ(u), v > u.  m <= u < v keeps (hi, lo) canonical.
-        bidir = E.select(F.col("hi").alias("u"), F.col("lo").alias("v")).union(
-            E.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        large = (
-            bidir.withColumn("m", F.least(F.min("v").over(w_u), F.col("u")))
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .distinct()
-        )
-        # Small-star on the (hi -> lo) orientation: for each u,
-        # m = min of its smaller neighbors; re-hang the others and u
-        # itself off m.  Again parent < child by construction.
-        tagged = (
-            large.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-            .withColumn("m", F.min("v").over(w_u))
-        )
-        new_e, new_path = _pin(
-            tagged.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .union(tagged.select(F.col("u").alias("hi"),
-                                 F.col("m").alias("lo")))
-            .distinct()
-        )
-        n_new = new_e.count()
-        # Fixed point = set equality; both sides are distinct sets, so
-        # equal counts + empty one-sided difference suffice.  The
-        # difference check is the last reader of the previous round.
-        converged = n_new == n_e and new_e.exceptAll(E).isEmpty()
-        if e_path is not None:
-            _delete_path(spark, e_path)
-        E, e_path, n_e = new_e, new_path, n_new
-        if converged:
-            star = E.select(F.col("hi").alias("node"),
-                            F.col("lo").alias("component"))
-            return nodes.join(star, "node", "left").select(
-                "node",
-                F.coalesce("component", F.col("node")).alias("component"),
-            )
-    if n_e == 0:
-        # Edgeless graph (only self-loops survived canonicalization):
-        # every node is its own component.
-        return nodes.withColumn("component", F.col("node"))
-    raise RuntimeError(
-        f"connected_components(algorithm='star') did not reach a fixed "
-        f"point within max_iter={max_iter} rounds ({n_e} edges in the "
-        "working set); this exceeds the O(log n) bound for any realistic "
-        "graph — raise max_iter and report the graph shape"
+        "rounds (labels still changing in the final round) — raise max_iter"
     )
 
 
@@ -927,7 +784,6 @@ def duplicate_clusters(
     parallelism: int | None = None,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Duplicate clusters ``(node, component)`` — result-identical to
     ``connected_components(minhash_lsh_pairs(df))`` but safe under
@@ -1003,7 +859,7 @@ def duplicate_clusters(
     )
     return connected_components(
         edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir,
-        algorithm=algorithm, _after_edges_pinned=after_edges_pinned)
+        _after_edges_pinned=after_edges_pinned)
 
 
 def duplicate_cluster_edges(
@@ -1233,7 +1089,7 @@ def semantic_dedup(
     kept)`` — callers filter ``kept`` to materialize the pruned corpus.
 
     ``centroids`` come from the IVF machinery
-    (operators/similarity.py:train_centroids_kmeans at scale; any pinned
+    (operators/similarity.py:train_centroids_sample at scale; any pinned
     deterministic list for oracle-exact verification).  ``assign``:
 
     * ``"kernel"`` (default, the 100 TB path) — the Arrow-batched

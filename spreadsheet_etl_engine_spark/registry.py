@@ -2600,10 +2600,9 @@ def get(name: str) -> RegisteredQuery:
 # SAME hash-ordered collect the PQ trainer uses (FAISS discipline:
 # faiss trains IVF centroids on a sample, not the corpus), replacing
 # the MLlib k-means|| fit whose multi-job cost was ~80% of both ANN
-# bench lines; MLlib stays the kmeans=True/"mllib" opt-in and the
-# explicit-kmeans pytest pins are unchanged.  Executes under
-# similarity_topk_ivf and similarity_topk_ivfpq (both head-seated
-# above; recall re-measured 0.88-0.96 in-query at both SFs, the
+# bench lines (the MLlib and lite trainers were later deleted).
+# Executes under similarity_topk_ivf and similarity_topk_ivfpq (both
+# head-seated above; recall re-measured 0.88-0.96 in-query at both SFs, the
 # ivfpq pytest recall/determinism/precomputed-path gates green, 10x
 # scale probe re-run drained).  topk_pq / topk_bruteforce /
 # assign_centroid bytes unchanged — their queries ride.
@@ -2687,7 +2686,15 @@ def get(name: str) -> RegisteredQuery:
 #   dedup_within_watermark and keeps its head seat.
 # * session.py — daemon-module conf now local-master-gated (r15
 #   ADVICE): engine-wide wiring, no per-query output change.
+# Components/IVF consolidation audit: connected_components gained the
+# jump and hook shortcuts (labels unchanged; dedup_components and
+# curation_pipeline_decisions promoted to the top); similarity.py lost
+# its unused trainers (default path unchanged, both IVF queries seated);
+# session.py wiring and dedup_semantic's doc string change no output.
 DRIVER_PRIORITY: tuple[str, ...] = (
+    # --- changed-bytes re-verifications (consolidation audit above) ---
+    "curation_pipeline_decisions",
+    "dedup_components",
     # --- r16 changed-bytes re-verifications (audit above) ---
     "similarity_topk_ivfpq",
     "multimodal_decode",
@@ -2756,8 +2763,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "agg_histogram",
     "agg_linear_fit",
     "agg_moments",
-    "curation_pipeline_decisions",
-    "dedup_components",
     "dedup_embedding_neardup",
     "dedup_incremental",
     "dedup_index_probe",

@@ -26,7 +26,6 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` is a floor — AQE coalesces down from it,
     so on a big cluster set it ≳ 2-3× total cores.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Python workers must be able to import this package at daemon
     # launch (spark.python.daemon.module below): put the repo root on
     # the PYTHONPATH the JVM inherits BEFORE the gateway starts.  A
@@ -38,15 +37,40 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{_repo_root}{os.pathsep}{_pp}" if _pp else _repo_root
         )
+    spark = _builder(
+        app_name, master=master, shuffle_partitions=shuffle_partitions,
+        extra_conf=extra_conf,
+    ).getOrCreate()
+    # getOrCreate may hand back a pre-existing session whose builder confs
+    # were ignored; ANSI is runtime-settable, so enforce it there too
+    # (unless the caller explicitly overrode it via extra_conf).
+    if "spark.sql.ansi.enabled" not in (extra_conf or {}):
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    return spark
+
+
+def _builder(
+    app_name: str,
+    *,
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+) -> SparkSession.Builder:
+    """The configured builder :func:`get_spark` starts its session from
+    (no JVM is touched until ``getOrCreate``)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    extra_conf = extra_conf or {}
     # The effective master decides below whether the custom worker
-    # daemon is safe to wire up: the module only resolves through the
-    # DRIVER-side PYTHONPATH mutation above, which executors on a real
-    # cluster never see (r15 ADVICE) — there the stock daemon runs and
+    # daemon is safe to wire up: the module only resolves through
+    # get_spark's DRIVER-side PYTHONPATH mutation, which executors on a
+    # real cluster never see (r15 ADVICE) — there the stock daemon runs and
     # the zip-path cost returns until the module is shipped via
     # spark.submit.pyFiles + spark.executorEnv.PYTHONPATH by the
     # launcher, which owns deployment-specific file distribution.
+    # extra_conf is applied last below, so its spark.master wins.
     effective_master = (
-        master
+        extra_conf.get("spark.master")
+        or master
         or os.environ.get("MASTER")
         or os.environ.get("SPARK_MASTER")
         or f"local[{cpus}]"
@@ -86,12 +110,6 @@ def get_spark(
         builder = builder.master(master)
     elif not os.environ.get("MASTER") and not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # getOrCreate may hand back a pre-existing session whose builder confs
-    # were ignored; ANSI is runtime-settable, so enforce it there too
-    # (unless the caller explicitly overrode it via extra_conf).
-    if "spark.sql.ansi.enabled" not in (extra_conf or {}):
-        spark.conf.set("spark.sql.ansi.enabled", "true")
-    return spark
+    return builder

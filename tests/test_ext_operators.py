@@ -221,41 +221,11 @@ def test_connected_components_chain_triangle_pair(spark):
                    20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
 
 
-def test_star_components_equals_label_propagation(spark):
-    """algorithm='star' (alternating large-star/small-star, Kiveris et
-    al. 2014) must produce EXACTLY the min-label labels on every graph
-    shape the label tests cover — chains, triangles, cliques (the
-    megadup shape), self-loops/isolated nodes, id-reversed chains, and
-    a seeded random graph."""
-    import random
-
-    rng = random.Random(11)
-    shapes = {
-        "chain": [(i, i + 1) for i in range(1, 20)],
-        "reversed-chain": [(i + 1, i) for i in range(1, 20)],
-        "triangle+pair": [(10, 11), (11, 12), (12, 13), (20, 21),
-                          (21, 22), (20, 22), (30, 31)],
-        "clique": [(i, j) for i in range(1, 12) for j in range(i + 1, 12)],
-        "selfloop+pair": [(5, 5), (1, 2)],
-        "random": [(rng.randrange(60), rng.randrange(60))
-                   for _ in range(80)],
-    }
-    for name, e in shapes.items():
-        edges = spark.createDataFrame(e, "id_a long, id_b long")
-        lab = {(r["node"], r["component"])
-               for r in DD.connected_components(edges, max_iter=40).collect()}
-        star = {(r["node"], r["component"])
-                for r in DD.connected_components(
-                    edges, algorithm="star").collect()}
-        assert lab == star, f"{name}: {sorted(lab ^ star)[:10]}"
-
-
 def test_components_property_vs_union_find(spark):
-    """Property fuzz (r11): BOTH round structures must equal a trivial
+    """Property fuzz: connected_components must equal a trivial
     pure-Python union-find on arbitrary small graphs — duplicate edges,
     reversed orientations, self-loops, isolated stars, whatever
-    Hypothesis finds.  Comparing both against an independent model is
-    stronger than star==label alone (a shared defect cannot hide)."""
+    Hypothesis finds."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -280,63 +250,56 @@ def test_components_property_vs_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         expected = {(n, find(n)) for n in list(parent)}
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        for algo in ("label", "star"):
-            got = {(r["node"], r["component"])
-                   for r in DD.connected_components(
-                       df, max_iter=40, algorithm=algo).collect()}
-            assert got == expected, (algo, sorted(got ^ expected)[:8])
+        got = {(r["node"], r["component"])
+               for r in DD.connected_components(df).collect()}
+        assert got == expected, sorted(got ^ expected)[:8]
 
     run()
 
 
-def test_star_components_converges_where_label_cannot(spark):
-    """The documented escape hatch: a 200-node chain (diameter 199)
-    exceeds any reasonable label max_iter but the star formulation
-    contracts it in O(log n) rounds under the SAME budget."""
-    import pytest as _pytest
+def test_components_converge_on_long_chains(spark):
+    """The pointer jump and the hook let label trees merge as wholes, so
+    a 200-node chain (diameter 199) converges within the default
+    max_iter=25 — in both id orientations, and with shuffled ids, where
+    the jump alone would need ~50-90 rounds."""
+    import random
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 200)], "id_a long, id_b long")
-    with _pytest.raises(RuntimeError, match="algorithm='star'"):
-        DD.connected_components(chain, max_iter=25).collect()
-    got = {r["node"]: r["component"]
-           for r in DD.connected_components(
-               chain, max_iter=25, algorithm="star").collect()}
-    assert got == {i: 1 for i in range(1, 201)}
-
-
-def test_star_components_validates_algorithm(spark):
-    import pytest as _pytest
-
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with _pytest.raises(ValueError, match="'label' or 'star'"):
-        DD.connected_components(edges, algorithm="bfs")
+    shuffled = list(range(1, 201))
+    random.Random(3).shuffle(shuffled)
+    for name, e in {
+        "ascending": [(i, i + 1) for i in range(1, 200)],
+        "descending": [(i + 1, i) for i in range(1, 200)],
+        "shuffled": list(zip(shuffled, shuffled[1:])),
+    }.items():
+        chain = spark.createDataFrame(e, "id_a long, id_b long")
+        got = {r["node"]: r["component"]
+               for r in DD.connected_components(chain).collect()}
+        assert got == {i: 1 for i in range(1, 201)}, name
 
 
-def test_star_components_reliable_checkpoint_mode(spark, tmp_path):
-    """The star loop must honor the same explicit parquet round
-    lifecycle as the label loop: superseded rounds deleted, the result
-    readable from the surviving files, session checkpoint dir
-    untouched."""
+def test_components_reliable_checkpoint_round_lifecycle(spark, tmp_path):
+    """On a many-round graph (a 40-node chain plus a pair) the explicit
+    parquet round lifecycle holds: superseded rounds are deleted as they
+    go, the result is readable from the surviving files, and the session
+    checkpoint dir is untouched."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)] + [(100, 101)],
         "id_a long, id_b long")
     before_ckpt_dir = spark.sparkContext.getCheckpointDir()
     local = {(r["node"], r["component"])
-             for r in DD.connected_components(
-                 edges, algorithm="star").collect()}
+             for r in DD.connected_components(edges).collect()}
     ckpt = tmp_path / "ckpt"
-    reliable_df = DD.connected_components(
-        edges, algorithm="star", checkpoint_dir=str(ckpt))
+    reliable_df = DD.connected_components(edges, checkpoint_dir=str(ckpt))
     reliable = {(r["node"], r["component"]) for r in reliable_df.collect()}
     assert local == reliable
     assert {c for _, c in local} == {1, 100}
     assert spark.sparkContext.getCheckpointDir() == before_ckpt_dir
     rounds = sorted(p.name for p in ckpt.iterdir())
-    # surviving: the sym pin (round-00000, referenced by the node set
-    # until the end) and the final edge round — superseded edge rounds
-    # (incl. the initial canonicalization) are deleted as they go.
+    # surviving: the sym pin (round-00000, referenced every round) and
+    # the final labels round; the initial labels and every superseded
+    # round were deleted, so the final one is numbered past round-00002.
     assert len(rounds) == 2 and rounds[0] == "round-00000", rounds
+    assert rounds[1] > "round-00002", rounds
     assert reliable_df.count() == len(local)
 
 
@@ -368,13 +331,6 @@ def test_duplicate_clusters_equals_naive_path(spark):
     # The mega-cluster is one component labelled by its min id, and every
     # injected doc is in it.
     assert {(1_000_000 + i, 1_000_000) for i in range(200)} <= collapsed
-    # r11: the star round structure must compose with the collapsed
-    # edge build end-to-end (the long-chain deployment path) and give
-    # the identical clustering.
-    star = {(r["node"], r["component"])
-            for r in DD.duplicate_clusters(
-                docs, "text", "doc_id", algorithm="star", **kw).collect()}
-    assert star == naive
 
     # Edge accounting: 200 identical docs cost the naive path
     # >= C(200,2) = 19900 pairs; the collapsed path's whole edge list
@@ -572,22 +528,23 @@ def test_salted_join_accepts_spark_mode_aliases(spark):
 
 
 def test_ivf_recall_against_bruteforce(spark):
-    """KMeans-IVF with nprobe=half the lists must recover most of the true
-    top-k on the real embeddings table."""
+    """IVF (sample-trained spherical k-means centroids) with nprobe=half
+    the lists must recover most of the true top-k on the real embeddings
+    table."""
     from spreadsheet_etl_engine_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = SIM.topk_bruteforce(emb, queries, "embedding", "vec_id", k=5)
     approx = SIM.topk_ivf(emb, queries, "embedding", "vec_id",
-                          k=5, nlist=8, nprobe=4, spill=2, kmeans=True)
+                          k=5, nlist=8, nprobe=4, spill=2)
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(truth & got) / len(truth)
-    # Measured 0.96 at this config (spherical-kmeans buckets + spill=2
-    # corpus replication) and 0.93-0.96 across the 10x scale probe; the
-    # floor keeps ~half that margin (r8 verdict item 6) so a silent
-    # quality regression fails well before recall halves.
+    # Measured 0.94 at this config (sample-trained spherical k-means
+    # buckets + spill=2 corpus replication; 0.98 at sf0.01); the floor
+    # keeps about half that margin so a silent quality regression
+    # fails well before recall halves.
     assert recall >= 0.9, f"IVF recall too low: {recall}"
 
 
@@ -741,7 +698,7 @@ def test_ivfpq_persisted_index_partition_pruning(spark, tmp_path):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cents, books = SIM.train_ivfpq(emb, "embedding", nlist=8, m=8,
-                                   ksub=256, kmeans=False)
+                                   ksub=256)
     idx_path = str(tmp_path / "ivfpq_index")
     (SIM.ivfpq_encode(emb.select("vec_id", "embedding"), "embedding",
                       cents, books)
@@ -815,10 +772,11 @@ def test_similarity_null_contracts_and_named_errors(spark):
     pr = {r["vec_id"]: r["probes"]
           for r in SIM.probe_centroids(mix, "embedding", cents, 2).collect()}
     assert pr[2] is None and list(pr[1]) == [0, 1]
-    lite = SIM.train_centroids_lite(mix, "embedding", nlist=2)
-    assert len(lite) == 2 and all(v is not None for c in lite for v in c)
+    trained = SIM.train_centroids_sample(mix, "embedding", nlist=2)
+    assert len(trained) == 2 and all(
+        v is not None for c in trained for v in c)
     out = SIM.topk_ivf(mix, mix.filter(F.col("vec_id") == 1), "embedding",
-                       "vec_id", k=2, nlist=2, nprobe=2, kmeans=False)
+                       "vec_id", k=2, nlist=2, nprobe=2)
     assert {r["neighbor_id"] for r in out.collect()} == {3}
     # cosine_pandas matches the expr form's NULL semantics too.
     pairs = spark.createDataFrame(
@@ -1703,34 +1661,6 @@ def test_checkpoint_dir_conf_reachable_from_registry(spark, sf_dir, tmp_path):
     names = sorted(p.name for p in runs[0].iterdir())
     assert "signature-tags" not in names and len(names) == 2, names
     assert names[0] == "round-00000", names
-
-
-def test_components_algorithm_conf_reachable_from_registry(spark, sf_dir):
-    """r11 (same lesson as the r9 checkpoint-dir item: an operator
-    parameter no registry caller can reach is not really shipped):
-    setting the session conf key must route dedup_components through
-    the star formulation with the identical result, and an invalid
-    value must fail loud at configuration time."""
-    from spreadsheet_etl_engine_spark.operators.dedup import (
-        COMPONENTS_ALGORITHM_CONF,
-    )
-    from spreadsheet_etl_engine_spark.registry import REGISTRY
-
-    fn = REGISTRY["dedup_components"].fn
-    base = {(r["node"], r["component"]) for r in fn(spark, sf_dir).collect()}
-    spark.conf.set(COMPONENTS_ALGORITHM_CONF, "star")
-    try:
-        star = {(r["node"], r["component"])
-                for r in fn(spark, sf_dir).collect()}
-    finally:
-        spark.conf.unset(COMPONENTS_ALGORITHM_CONF)
-    assert star == base and len(base) > 0
-    spark.conf.set(COMPONENTS_ALGORITHM_CONF, "bfs")
-    try:
-        with pytest.raises(ValueError, match="'label' or 'star'"):
-            fn(spark, sf_dir).collect()
-    finally:
-        spark.conf.unset(COMPONENTS_ALGORITHM_CONF)
 
 
 def test_text_unicode_hygiene_counts(spark, tmp_path):
